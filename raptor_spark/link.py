@@ -1,5 +1,5 @@
-"""Stage 2: entity linking — MinHash/LSH blocking + candidate-pair join +
-Jaccard verify, all as DataFrame ops.
+"""Stage 2: entity linking — MinHash/LSH blocking + in-bucket Jaccard verify,
+all as DataFrame ops.
 
 Spark-first re-expression of the reference's ANN insert-dedup (batch-query new
 vectors, link iff cosine ≥ 0.9 — raptor/qdrant_search_docker/api_insert.py:14,
@@ -12,9 +12,11 @@ vectors, link iff cosine ≥ 0.9 — raptor/qdrant_search_docker/api_insert.py:1
 2. fuzzy block: non-head names → char-3-gram shingles → 32 MinHash values
    (xxhash64, JVM-side) → 8 bands × 4 rows → candidates from per-bucket
    ``collect_list`` pair expansion keyed on (first_token, band_id,
-   band_hash), with oversize buckets dropped (MAX_BAND_BUCKET skew guard)
-   → verify with exact Jaccard via ``array_intersect``/``array_union``
-   sizes (JVM-side, no UDF).
+   band_key), with oversize buckets dropped (MAX_BAND_BUCKET skew guard)
+   and each pair verified inline with exact Jaccard via
+   ``array_intersect``/``array_union`` sizes (JVM-side, no UDF). The
+   signature, banding, bucket expansion and Jaccard are the shared
+   ``raptor_spark.lsh`` primitives that the dedup operators also run.
 
 The bucket key includes the normalized FIRST TOKEN, which both enforces the
 prefix-block rule and spreads band buckets. Head-symbol names (document
@@ -23,9 +25,11 @@ frequency over repos > 50%) are excluded from fuzzy blocking entirely, so
 bounds every candidate expansion at C(64,2) pairs.
 
 Scale notes: everything is per-distinct-NAME, not per-mention — the name
-dimension is orders of magnitude smaller than the triple table. Shuffles:
-one distinct, one bucket groupBy, one candidate distinct, one verify join.
-All joins are equi-joins eligible for broadcast when the name table is small.
+dimension is orders of magnitude smaller than the triple table. Shuffles
+over the shared name table: the exact-block self-join on ``nospace``, one
+bucket groupBy, one verified-pair distinct and the final union distinct —
+the verify runs inside the bucket expression, not as a join.
+``name_features`` adds its per-name and total repo-count aggregates.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from raptor_spark import lsh
 from raptor_spark.functions import norm_identifier_col
 from raptor_spark.oracle import HEAD_SYMBOL_MAX_DF, JACCARD_THRESHOLD
 from raptor_spark.tokenize import PRED_CALLS, PRED_DEFINES, char_shingles, normalize_identifier
@@ -161,52 +166,20 @@ def link_edges(triples: DataFrame, feats: DataFrame | None = None) -> DataFrame:
     )
 
     # -- 2. fuzzy block: MinHash/LSH over non-head names --------------------
-    # signatures are a pure projection over the per-name shingle ARRAY — no
-    # explode/groupBy shuffle (an earlier explode+32-agg formulation shuffled
-    # every shingle row and compiled a 32-column aggregate for nothing)
     # hashed shingle sets (array<long>): Jaccard over 64-bit shingle hashes
     # equals Jaccard over the strings up to ~2^-64 collisions, and longs
-    # shuffle + intersect several times cheaper than strings
+    # shuffle + intersect several times cheaper than strings. Signatures
+    # stay over the shingle strings.
     fuzzy_feats = feats.filter(~F.col("is_head")).withColumn(
         "hsh", F.transform("shingles", lambda s: F.xxhash64(s))
     )
-
-    def _minhash(seed: int):
-        # NB: a two-arg transform lambda would receive (element, array_index)
-        # and silently shadow the seed — keep this a one-arg closure
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    sig = fuzzy_feats.select(
-        "name",
-        "first_token",
-        "nospace",
-        "hsh",
-        *[
-            F.array_min(F.transform("shingles", _minhash(i))).alias(f"h{i}")
-            for i in range(N_MINHASH)
-        ],
-    )
-    rows_per_band = N_MINHASH // N_BANDS
-    bands = sig.select(
-        "name",
-        "first_token",
-        "nospace",
-        "hsh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-                        ).alias("band_hash"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select(
-        "name", "first_token", "nospace", "hsh", "band.band_id", "band.band_hash"
+    member = ["name", "nospace", "hsh"]
+    bands = lsh.band_rows(
+        fuzzy_feats,
+        ["first_token", *member],
+        "shingles",
+        lsh.xxhash_lanes(N_MINHASH),
+        N_BANDS,
     )
 
     # -- 2b + 3 fused: capped-bucket collect_list expansion with the Jaccard
@@ -219,47 +192,15 @@ def link_edges(triples: DataFrame, feats: DataFrame | None = None) -> DataFrame:
     # bounded by MAX_BAND_BUCKET, so inline work is ≤ C(64,2) jaccards per
     # bucket; re-verifying a pair that collides in several bands costs far
     # less than one per-candidate shuffle row did.
-    buckets = (
-        bands.groupBy("first_token", "band_id", "band_hash")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("name"), F.col("nospace"), F.col("hsh"))
-                )
-            ).alias("ms")
-        )
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= MAX_BAND_BUCKET))
-    )
-    ms = F.col("ms")
-
-    def _jac(x, y):
-        return F.size(F.array_intersect(x["hsh"], y["hsh"])) / F.size(
-            F.array_union(x["hsh"], y["hsh"])
+    def verify(x, y):
+        # space-stripped equals are already linked exactly; skip
+        # re-verify — and only verified pairs become rows at all
+        return (x["nospace"] != y["nospace"]) & (
+            lsh.jaccard(x["hsh"], y["hsh"]) >= F.lit(JACCARD_THRESHOLD)
         )
 
-    pair_structs = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.filter(
-                F.transform(
-                    F.slice(ms, i + F.lit(2), F.size(ms)),
-                    lambda y: F.struct(
-                        x["name"].alias("a"), y["name"].alias("b"),
-                        x["nospace"].alias("na"), y["nospace"].alias("nb"),
-                        _jac(x, y).alias("jac"),
-                    ),
-                ),
-                # space-stripped equals are already linked exactly; skip
-                # re-verify — and only verified pairs become rows at all
-                lambda p: (p["na"] != p["nb"])
-                & (p["jac"] >= F.lit(JACCARD_THRESHOLD)),
-            ),
-        )
-    )
-    verified = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.a", "p.b")
-        .distinct()
+    verified = lsh.bucket_pairs(
+        bands, ["first_token", "band_id", "band_key"], member, MAX_BAND_BUCKET, verify
     )
 
     return exact.unionByName(verified).distinct()

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from raptor_spark import lsh
 from raptor_spark.functions import sha256_col
 
 
@@ -94,9 +95,11 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs (a, b, jaccard), a < b, via MinHash banding.
 
-    Per row: shingle → n_hashes MinHash values (xxhash64 with seed column) →
-    n_bands band hashes → self-equi-join per band → exact Jaccard verify on
-    the shingle arrays (array_intersect/array_union, JVM-side).
+    Per row: shingle → n_hashes MinHash values (``lsh.xxhash_lanes``) →
+    n_bands band hashes → capped-bucket pair expansion → exact Jaccard
+    verify on the shingle arrays (``lsh.verify_pairs``). Rows with NULL
+    text have no shingles and are dropped; blank text shingles to the empty
+    string, so blank documents pair with each other.
 
     Scale discipline (each step A/B-measured at sf0.1 and at the 40k-file
     scaling corpus — dense near-dup corpora blow up naive plans ~50×):
@@ -104,7 +107,7 @@ def minhash_lsh_pairs(
       verify both run on array<long> (same set semantics modulo 64-bit hash
       collisions, far cheaper to shuffle and intersect than strings);
     * the band shuffle ships IDS ONLY: each doc's band rows are (id,
-      band_id, band_hash) longs, never the shingle array — an earlier form
+      band_id, band_key) longs, never the shingle array — an earlier form
       carried the full array<long> through all n_bands band rows into the
       collect_list buckets and verified pairs inline per band, which (a)
       multiplied the shuffle payload by n_bands × |sh| (~70× more bytes at
@@ -112,134 +115,55 @@ def minhash_lsh_pairs(
       and its N→4N scaling efficiency stuck at ~0.6), and (b) re-ran the
       exact-Jaccard verify in EVERY band a dense cluster collided in
       (~n_bands× redundant intersect/union work);
-    * candidate (a, b) id-pairs are expanded per bucket (collect_list +
-      pair expression — a band self-join shuffled three times with hot
-      buckets pinned to single tasks), ``distinct``-ed FIRST (16-byte
-      rows), and only then joined back to the persisted (id, shingles)
-      table for ONE exact-Jaccard verify per unique pair — the verify-after-
-      distinct order is output-identical to verify-per-band + distinct
-      (jaccard is a pure function of the pair) but does 1/n_bands of the
-      array work and shuffles narrow rows everywhere;
-    * band buckets larger than ``max_bucket`` are dropped (an LSH bucket
-      that big means the band hash is uninformative for that cluster — its
-      members are still covered by their other n_bands-1 bands), which also
-      caps the per-bucket expansion at C(max_bucket, 2) id-pairs. Pass
+    * candidate (a, b) id-pairs are expanded per bucket, ``distinct``-ed
+      FIRST (16-byte rows), and only then joined back to the persisted
+      (id, shingles) table for ONE exact-Jaccard verify per unique pair;
+    * band buckets larger than ``max_bucket`` are dropped, which caps the
+      per-bucket expansion at C(max_bucket, 2) id-pairs. Pass
       ``max_bucket=None`` for exhaustive behavior.
     """
-    rows_per_band = n_hashes // n_bands
-    base = _ensure_parallel(df).select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(
-            F.transform(
-                word_shingles_col(F.col(text_col), shingle_n),
-                lambda s: F.xxhash64(s),
-            )
-        ).alias("sh"),
-    ).filter(F.size("sh") > 0)
-    # the shingle table feeds the signature path AND both verify join-backs;
-    # unpersisted, each consumer would recompute the full shingling lineage
-    base = base.persist()
-    sig = base.select(
-        "id",
-        *[
-            F.array_min(
-                F.transform(F.col("sh"), lambda s: F.xxhash64(s, F.lit(i)))
-            ).alias(f"h{i}")
-            for i in range(n_hashes)
-        ],
-    )
-    bands = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-                        ).alias("band_hash"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "band.band_id", "band.band_hash")
-    buckets = bands.groupBy("band_id", "band_hash").agg(
-        F.array_sort(F.collect_list(F.col("id"))).alias("ids")
-    ).filter(F.size("ids") >= 2)
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
-    ids = F.col("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    cands = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.a", "p.b")
-        .distinct()
-    )
-    return (
-        cands.join(
-            base.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a"
-        )
-        .join(
-            base.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b"
-        )
+    base = (
+        _ensure_parallel(df)
+        .filter(F.col(text_col).isNotNull())
         .select(
-            "a",
-            "b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
+            F.col(id_col).alias("id"),
+            F.array_distinct(
+                F.transform(
+                    word_shingles_col(F.col(text_col), shingle_n),
+                    lambda s: F.xxhash64(s),
+                )
+            ).alias("sh"),
         )
-        .filter(F.col("jaccard") >= F.lit(jaccard_threshold))
+        # the shingle table feeds the signature path AND both verify
+        # join-backs; unpersisted, each consumer would recompute the full
+        # shingling lineage
+        .persist()
     )
+    bands = lsh.band_rows(base, ["id"], "sh", lsh.xxhash_lanes(n_hashes), n_bands)
+    cands = lsh.bucket_pairs(bands, ["band_id", "band_key"], ["id"], max_bucket)
+    return lsh.verify_pairs(cands, base, "sh", jaccard_threshold)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
     """(id, simhash): sign-aggregated word-hash fingerprint. Two texts are
     near-dups when hamming(simhash_a, simhash_b) is small.
 
-    Shape: explode words → one groupBy(id) with ``bits`` trivial conditional
-    sums → assemble the fingerprint. An earlier formulation ran 64 nested
-    ``F.aggregate`` lambdas over the word array per row — one enormous
-    expression that took ~30 s just to evaluate on 500 docs; the explode +
-    flat-agg plan is a single shuffle of (id, hash) longs and codegens to
-    tight per-bit adds.
+    Shape: explode distinct words → xxhash64 per word → ``lsh.simhash_fold``
+    (one groupBy(id) of conditional ±1 sums). Rows with NULL text are
+    dropped; any other text splits to at least one word (blank text to the
+    empty word), so every kept row gets a fingerprint.
     """
-    df = _ensure_parallel(df)
-    ids = df.select(F.col(id_col).alias("id"))
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(_words(F.col(text_col)))).alias("w"),
-    ).select("id", F.xxhash64("w").alias("h"))
-    sums = ex.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{i}")
-            for i in range(bits)
-        ]
+    ex = (
+        _ensure_parallel(df)
+        .filter(F.col(text_col).isNotNull())
+        .select(
+            F.col(id_col).alias("id"),
+            F.explode(F.array_distinct(_words(F.col(text_col)))).alias("w"),
+        )
+        .select("id", F.xxhash64("w").alias("h"))
     )
-    fp = None
-    for i in range(bits):
-        term = F.when(
-            F.col(f"b{i}") > 0,
-            F.lit(1 << i if i < 63 else -(1 << 63)).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        fp = term if fp is None else fp + term
-    out = sums.select("id", fp.alias("simhash"))
-    # texts with no words exploded away; restore them with the all-zero
-    # fingerprint the aggregate formulation produced
-    return ids.join(out, "id", "left").select(
-        "id", F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash")
+    return lsh.simhash_fold(
+        ex, lambda i: F.shiftright("h", i).bitwiseAND(F.lit(1)), bits
     )
 
 
@@ -720,31 +644,22 @@ def minhash_signature_md5(
     df: DataFrame, id_col: str, text_col: str, n: int = 1, n_hashes: int = 16
 ) -> DataFrame:
     """Per-document MinHash signature over word n-gram shingles with
-    md5-derived hash functions: h_j(s) = first 8 hex chars of
-    md5(s || '#mh<j>') as a 32-bit integer — reproducible byte-for-byte in
-    any SQL engine (the same cross-engine trick as curation._bloom_pos), so
-    signatures can be audited outside Spark. Returns (id, mh1..mh<k>).
+    md5-derived hash functions (``lsh.md5_lanes``): h_j(s) = first 8 hex
+    chars of md5(s || '#mh<j>') as a 32-bit integer — reproducible
+    byte-for-byte in any SQL engine, so signatures can be audited outside
+    Spark. Returns (id, mh1..mh<k>), one row per input row.
 
-    This is the CALIBRATION twin of the production `minhash_near_dups`
-    path (which uses xxhash64 lane-mixing for speed): same estimator,
-    engine-portable hashes. Scale shape: one shingle explode, one
-    map-side-combined min aggregation keyed by id — the corpus shuffles
-    once and the output is one narrow row per document."""
+    This is the CALIBRATION twin of the production `minhash_lsh_pairs`
+    path (which uses xxhash64 lanes for speed): same estimator,
+    engine-portable hashes. Scale shape: the shingle array is projected
+    once and every lane is an ``array_min`` over it — no shuffle; the
+    output is one narrow row per document."""
     sh = _ensure_parallel(df).select(
         F.col(id_col).alias("id"),
-        F.explode(word_shingles_col(F.col(text_col), n)).alias("s"),
+        word_shingles_col(F.col(text_col), n).alias("sh"),
     )
-    aggs = [
-        F.min(
-            F.conv(
-                F.substring(F.md5(F.concat(F.col("s"), F.lit(f"#mh{j}"))), 1, 8),
-                16,
-                10,
-            ).cast("long")
-        ).alias(f"mh{j}")
-        for j in range(1, n_hashes + 1)
-    ]
-    return sh.groupBy("id").agg(*aggs)
+    sig = lsh.signature(F.col("sh"), lsh.md5_lanes(n_hashes))
+    return sh.select("id", *[h.alias(f"mh{j}") for j, h in enumerate(sig, 1)])
 
 
 def minhash_lsh_pairs_md5(
@@ -761,97 +676,35 @@ def minhash_lsh_pairs_md5(
     twin of `minhash_lsh_pairs`: signatures are the md5-derived lanes of
     `minhash_signature_md5` and band keys are the concatenated lane
     VALUES (concat_ws('#', band_id, lanes...)) rather than an xxhash64 of
-    them — banding groups by lane-tuple equality either way, so hashing
-    the tuple is pure compression and skipping it makes the exact
-    candidate set reproducible byte-for-byte in any SQL engine (the same
-    portability trick as `lsh_blocking_audit`). This is what graduates
-    the LSH dedup path from rows-only to value-hash-gated against DuckDB
-    (VERDICT r4 next-round #2); semantics mirror the reference's 0.9
-    ANN-dedup anti-join (qdrant_search_docker/api_insert.py:130-165).
+    them, so the exact candidate set is reproducible byte-for-byte in any
+    SQL engine (the same portability trick as `lsh_blocking_audit`). This
+    is what graduates the LSH dedup path from rows-only to value-hash-gated
+    against DuckDB (VERDICT r4 next-round #2); semantics mirror the
+    reference's 0.9 ANN-dedup anti-join (qdrant_search_docker/
+    api_insert.py:130-165). NULL text is dropped, as in `minhash_lsh_pairs`.
 
-    Scale discipline is the production path's, unchanged: band rows carry
-    IDS ONLY; candidate (a, b) pairs are expanded per capped bucket via
-    collect_list (hot buckets never self-join), distinct-ed FIRST, and
-    the exact-Jaccard verify runs ONCE per unique pair by joining the
-    persisted shingle table back on each side — shingle arrays never
-    travel through the band shuffle."""
+    Scale discipline is the production path's, through the same `lsh`
+    primitives: band rows carry IDS ONLY; candidate (a, b) pairs are
+    expanded per capped bucket, distinct-ed FIRST, and the exact-Jaccard
+    verify runs ONCE per unique pair by joining the persisted shingle
+    table back on each side — shingle arrays never travel through the
+    band shuffle."""
     if n_hashes % bands:
         raise ValueError(f"bands={bands} must divide n_hashes={n_hashes}")
-    r = n_hashes // bands
     base = (
         _ensure_parallel(df)
+        .filter(F.col(text_col).isNotNull())
         .select(
             F.col(id_col).alias("id"),
-            word_shingles_col(F.col(text_col), n).alias("ws"),
+            word_shingles_col(F.col(text_col), n).alias("sh"),
         )
-        .filter(F.size("ws") > 0)
         .persist()
     )
-    sh = base.select("id", F.explode(F.col("ws")).alias("s"))
-    sig = sh.groupBy("id").agg(
-        *[
-            F.min(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.col("s"), F.lit(f"#mh{j}"))), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-            ).alias(f"mh{j}")
-            for j in range(1, n_hashes + 1)
-        ]
+    keys = lsh.band_rows(
+        base, ["id"], "sh", lsh.md5_lanes(n_hashes), bands, value_keyed=True
     )
-    band_structs = [
-        F.struct(
-            F.concat_ws(
-                "#",
-                F.lit(j),
-                *[F.col(f"mh{j * r + i + 1}") for i in range(r)],
-            ).alias("bk")
-        )
-        for j in range(bands)
-    ]
-    keys = sig.select(
-        "id", F.explode(F.array(*band_structs)).alias("s")
-    ).select("id", F.col("s.bk").alias("bk"))
-    buckets = keys.groupBy("bk").agg(
-        F.array_sort(F.collect_list(F.col("id"))).alias("ids")
-    ).filter(F.size("ids") >= 2)
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
-    ids = F.col("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    cands = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.a", "p.b")
-        .distinct()
-    )
-    return (
-        cands.join(
-            base.select(F.col("id").alias("a"), F.col("ws").alias("ws_a")), "a"
-        )
-        .join(
-            base.select(F.col("id").alias("b"), F.col("ws").alias("ws_b")), "b"
-        )
-        .select(
-            "a",
-            "b",
-            (
-                F.size(F.array_intersect("ws_a", "ws_b"))
-                / F.size(F.array_union("ws_a", "ws_b"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(jaccard_threshold))
-    )
+    cands = lsh.bucket_pairs(keys, ["band_id", "band_key"], ["id"], max_bucket)
+    return lsh.verify_pairs(cands, base, "sh", jaccard_threshold)
 
 
 def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -864,16 +717,17 @@ def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     is consumed one hex DIGIT at a time.
 
     Shape matches `simhash`: one explode of distinct words, md5 projected
-    ONCE per (id, word) row, 16 digit columns decoded with conv(), then a
-    single groupBy(id) with 64 conditional ±1 sums and the fingerprint
-    assembled from the sign bits (bit 63 via the Long.MIN_VALUE literal)."""
-    bits = 64
-    df = _ensure_parallel(df)
-    ids = df.select(F.col(id_col).alias("id"))
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(_words(F.col(text_col)))).alias("w"),
-    ).select("id", F.md5("w").alias("h"))
+    ONCE per (id, word) row, 16 digit columns decoded with conv(), then the
+    shared ``lsh.simhash_fold``. NULL text is dropped, as in `simhash`."""
+    ex = (
+        _ensure_parallel(df)
+        .filter(F.col(text_col).isNotNull())
+        .select(
+            F.col(id_col).alias("id"),
+            F.explode(F.array_distinct(_words(F.col(text_col)))).alias("w"),
+        )
+        .select("id", F.md5("w").alias("h"))
+    )
     dg = ex.select(
         "id",
         *[
@@ -883,30 +737,8 @@ def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             for d in range(16)
         ],
     )
-    sums = dg.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col(f"d{j // 4}"), j % 4).bitwiseAND(
-                        F.lit(1)
-                    )
-                    == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"b{j}")
-            for j in range(bits)
-        ]
-    )
-    fp = None
-    for j in range(bits):
-        term = F.when(
-            F.col(f"b{j}") > 0,
-            F.lit(1 << j if j < 63 else -(1 << 63)).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        fp = term if fp is None else fp + term
-    out = sums.select("id", fp.alias("simhash"))
-    return ids.join(out, "id", "left").select(
-        "id", F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash")
+    return lsh.simhash_fold(
+        dg, lambda j: F.shiftright(F.col(f"d{j // 4}"), j % 4).bitwiseAND(F.lit(1))
     )
 
 
@@ -926,7 +758,7 @@ def minhash_calibration(
     distribution means the banding config no longer matches the corpus.
 
     Scale shape: exact pairs come from the prefix-filtered SSJoin
-    (`ngram_jaccard_pairs`); signatures are one min-aggregation; the final
+    (`ngram_jaccard_pairs`); signatures are a map-side projection; the final
     step joins one narrow signature row per side onto the pair set — no
     shingle arrays cross the pair join (the wide-payload rule)."""
     pairs = ngram_jaccard_pairs(df, id_col, text_col, n=n, threshold=threshold)
@@ -1100,27 +932,17 @@ def lsh_blocking_audit(
     pairs come from the lossless prefix-filtered SSJoin
     (ngram_jaccard_pairs).
 
-    Scale shape: signatures are one corpus shuffle; band keys are
-    map-side; the candidate join is bucket-keyed (same discipline as the
+    Scale shape: signatures and band keys (``lsh.band_keys``) are
+    map-side projections; the candidate join is bucket-keyed (same discipline as the
     production minhash path — only (id, band_key) rows cross it); the
     audit output is ONE row of counters."""
     if n_hashes % bands:
         raise ValueError(f"bands={bands} must divide n_hashes={n_hashes}")
-    r = n_hashes // bands
     sig = minhash_signature_md5(df, id_col, text_col, n=n, n_hashes=n_hashes)
-    band_structs = [
-        F.struct(
-            F.concat_ws(
-                "#",
-                F.lit(j),
-                *[F.col(f"mh{j * r + i + 1}") for i in range(r)],
-            ).alias("bk")
-        )
-        for j in range(bands)
-    ]
+    lanes = [F.col(f"mh{j}") for j in range(1, n_hashes + 1)]
     keys = sig.select(
-        "id", F.explode(F.array(*band_structs)).alias("s")
-    ).select("id", F.col("s.bk").alias("bk")).persist()
+        "id", lsh.band_keys(lanes, bands, value_keyed=True).alias("s")
+    ).select("id", F.col("s.band_key").alias("bk")).persist()
     x, y = keys.alias("x"), keys.alias("y")
     cand = (
         x.join(y, (F.col("x.bk") == F.col("y.bk")) & (F.col("x.id") < F.col("y.id")))

@@ -1079,7 +1079,8 @@ def _mpeg1_frame_header(data: bytes, pos: int):
 def _mpeg_audio_frames(data: bytes):
     """Consecutive frame walk; ≥2 valid back-to-back frames required (so
     prose bytes never false-positive). Real-world wrapping is honored: a
-    leading ID3v2 tag is skipped (10-byte header + synchsafe size) and a
+    leading ID3v2 tag is skipped (10-byte header + synchsafe size, plus a
+    10-byte footer when flag bit 0x10 is set) and a
     trailing 128-byte ID3v1 'TAG' block is allowed after the last frame.
     Returns [(pos, hdr)] or None."""
     pos = 0
@@ -1087,7 +1088,7 @@ def _mpeg_audio_frames(data: bytes):
     if data[:3] == b"ID3" and len(data) >= 10:
         size = ((data[6] & 0x7F) << 21 | (data[7] & 0x7F) << 14
                 | (data[8] & 0x7F) << 7 | (data[9] & 0x7F))
-        pos = 10 + size
+        pos = 10 + size + (10 if data[5] & 0x10 else 0)
     if end - pos >= 128 and data[end - 128:end - 125] == b"TAG":
         end -= 128
     frames = []

@@ -270,6 +270,8 @@ class Pipeline:
                 lineage_triples=triples,
             )
         linked = linked.persist()
+        # both name-table consumers have committed (or were resume-skipped)
+        feats.unpersist()
 
         # -- stage 3: nodes / edges -------------------------------------------
         # Both derive from the committed `linked` table and write disjoint

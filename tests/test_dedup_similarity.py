@@ -75,6 +75,61 @@ def test_minhash_bucket_cap_only_drops_flooded_buckets(spark, docs):
     assert len(uncapped) == 0 or len(capped) / len(uncapped) >= 0.95
 
 
+def test_bucket_pairs_cap_boundary(spark):
+    """The shared capped-bucket expansion against itertools.combinations on
+    hand-built buckets: a singleton emits nothing, a bucket of exactly
+    max_bucket members emits all C(max_bucket, 2) pairs, one more member
+    drops the bucket, and max_bucket=None keeps every bucket."""
+    from itertools import combinations
+
+    from raptor_spark.lsh import bucket_pairs
+
+    cap = 5
+    members = {"one": [7], "full": list(range(10, 10 + cap)),
+               "over": list(range(20, 21 + cap))}
+    rows = spark.createDataFrame(
+        [(k, i) for k, ids in members.items() for i in reversed(ids)],
+        "k string, id long",
+    )
+
+    def want(keys):
+        return {p for k in keys for p in combinations(members[k], 2)}
+
+    capped = _pairs(bucket_pairs(rows, ["k"], ["id"], cap))
+    assert len(capped) == cap * (cap - 1) // 2
+    assert capped == want(["full"])
+    assert _pairs(bucket_pairs(rows, ["k"], ["id"], None)) == want(members)
+    # the in-bucket predicate sees both member structs, a < b
+    odd = _pairs(
+        bucket_pairs(rows, ["k"], ["id"], None, lambda x, y: (x["id"] + y["id"]) % 2 == 1)
+    )
+    assert odd == {(a, b) for a, b in want(members) if (a + b) % 2}
+
+
+def test_dedup_twins_drop_null_text(spark):
+    """NULL text has no words or shingles: the MinHash and SimHash twins
+    drop it (as their DuckDB oracles do, unnest(NULL) emitting no rows),
+    while blank texts ('' and whitespace) still pair with each other."""
+    from raptor_spark.operators.dedup import minhash_lsh_pairs_md5, simhash_md5
+
+    fox = "the quick brown fox jumps over the lazy dog"
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, "   "), (5, fox), (6, fox + " again")],
+        "id long, text string",
+    )
+    for pairs in (
+        minhash_lsh_pairs(df, "id", "text", shingle_n=2, jaccard_threshold=0.5),
+        minhash_lsh_pairs_md5(df, "id", "text", n=1, n_hashes=16, bands=16),
+    ):
+        got = {(r.a, r.b): r.jaccard for r in pairs.collect()}
+        assert set(got) == {(3, 4), (5, 6)}, got
+        assert got[(3, 4)] == 1.0
+    for fn in (simhash, simhash_md5):
+        fp = fn(df, "id", "text")
+        assert sorted(r.id for r in fp.collect()) == [3, 4, 5, 6]
+        assert (3, 4) in _pairs(hamming_near_pairs(fp, max_distance=3))
+
+
 def test_simhash_hamming_symmetry_and_exactness(spark, docs):
     """Pairs from the pigeonhole blocking must match a brute-force hamming
     scan (the blocking is an optimization, never a semantic change)."""

@@ -1228,11 +1228,16 @@ def test_mpeg1_layer1_id3_wrapped_stream():
     )
     id3v2 = b"ID3\x03\x00\x00\x00\x00\x00\x14" + b"\x00" * 20
     wrapped = id3v2 + core + b"TAG" + b"\x00" * 125
+    # ID3v2.4 footer flag (0x10): a 10-byte '3DI' footer follows the tag
+    # body and is not counted in the synchsafe size
+    footed = (b"ID3\x04\x00\x10\x00\x00\x00\x14" + b"\x00" * 20
+              + b"3DI\x04\x00\x10\x00\x00\x00\x14" + core)
     s1, r1 = decode_audio_samples(core)
-    s2, r2 = decode_audio_samples(wrapped)
-    assert r1 == r2 and np.array_equal(s1, s2)
-    h = parse_media_header(wrapped)
-    assert h is not None and h["format"] == "mpeg_audio"
+    for stream in (wrapped, footed):
+        s2, r2 = decode_audio_samples(stream)
+        assert r1 == r2 and np.array_equal(s1, s2)
+        h = parse_media_header(stream)
+        assert h is not None and h["format"] == "mpeg_audio"
     prose = b"ID3 tags are metadata containers " * 8
     assert decode_audio_samples(prose) is None
     assert parse_media_header(prose) is None

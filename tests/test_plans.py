@@ -117,6 +117,32 @@ def test_dedup_scale_paths_stay_bounded(spark):
         assert n <= max_exchanges, (name, n)
 
 
+def test_link_edges_plan_stays_bounded(spark, triples_df, tmp_path_factory):
+    """Entity linking on the fixture corpus, plan-pinned: an exchange
+    budget, ONE name-featurization pass (the shared persisted name table,
+    read by both the exact and the fuzzy branch), no Python evaluation or
+    cartesian, and exactly one nested-loop join — the one-row
+    head-threshold broadcast in name_features."""
+    import re
+
+    from raptor_spark.link import link_edges, name_features
+
+    # plan over a fresh parquet scan: a relation another test left cached
+    # (already materialized, so printed with its final AQE plan) would
+    # otherwise stand in for part of this plan and change its shape
+    d = str(tmp_path_factory.mktemp("link_plan") / "triples")
+    triples_df.write.parquet(d)
+    triples = spark.read.parquet(d)
+    feats = name_features(triples).persist()
+    p = plan_str(link_edges(triples, feats=feats))
+    feats.unpersist()
+    assert len(re.findall(r"\(\d+\) Exchange", p)) <= 7, p
+    assert len(re.findall(r"\(\d+\) MapInPandas", p)) <= 1, p
+    assert len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", p)) == 1, p
+    for node in ("CartesianProduct", "BatchEvalPython", "ArrowEvalPython"):
+        assert node not in p, node
+
+
 def test_materialized_layout_prunes_partitions(spark, triples_df, tmp_path_factory):
     """The nodes/edges partition spec (lang, repo_bucket) must turn a lang
     filter into PartitionFilters on the scan — the read-path payoff of the
